@@ -8,7 +8,10 @@ operator slug from SURVEY.md §2 (registered in
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -16,369 +19,55 @@ from resotodatalink_spark import registry
 
 registry.load_all()
 
-# The driver's correctness sweep attests the FIRST 50 dict entries only
-# (CORRECTNESS_r01/r02 each stop at exactly 50).  Policy (per round-2
-# ADVICE): slugs whose implementation or oracle CHANGED this round are
-# always inside the window, followed by the slugs with the stalest
-# attestation.  Slugs with a fresh green row from last round and no
-# changes this round are the ones that may fall past the cap.  All
-# slugs stay registered.
-_R14_HEAD = [
-    # Round-14 changed slug (optimization round 2): the spread exchange
-    # was removed from the KN pairing pass (plans/r14/, tri-SF green).
-    "kneser_ney_bigram",
-    # r13-changed-but-driver-unattested (r13 ADVICE item 1): these four
-    # had implementation changes in round 13's optimization commits
-    # (bm25/ngram spreads, the sparse hashtok projection, the packed-
-    # long BFS) but sat outside the r13 window — window-first now, the
-    # _R13B_WAVE precedent.
-    "bm25_scoring",
-    "ngram_collocations",
-    "sparse_cosine_pairs",
-    "graph_shortest_paths",
+# The driver's correctness sweep attests the FIRST 50 ``queries()``
+# entries only.  Slugs whose implementation or oracle changed since the
+# newest CORRECTNESS report go here; every other slug ranks itself from
+# the committed reports (see ``attest_order``).
+CHANGED = [
+    "sparse_cosine_pairs",  # dead alias dropped from the verify joins
 ]
 
-_R13_CHANGED = [
-    # Round-13 changed/new slugs — changed-slug policy says window-first.
-    # * dedup_embedding (r12 verdict item 2): the bare name now carries
-    #   the scale-safe production shape (theta=0.8, 6x16 bands,
-    #   per-vector keeper decisions) that rounds 11-12 registered as
-    #   dedup_embedding_t80 (green r12 row for this exact impl+oracle);
-    #   re-attested under the primary name it now owns.
-    # * dedup_embedding_fullrecall_audit: the full-recall-at-0.35
-    #   validation config (32x3 bands) the bare name used to carry,
-    #   renamed so its ~all-pairs candidate mass is audit-scoped by
-    #   name; same impl+oracle as the old bare slug's green r10 row.
-    "dedup_embedding",
-    "dedup_embedding_fullrecall_audit",
-    # Round-13 newcomers (registry 227 -> 233): see SURVEY §8j.
-    "stream_watermark_late_drop",
-    "robust_scale_normalize",
-    "embedding_dim_stats",
-    "tokens_per_doc_histogram",
-    "stratified_quantile_bands",
-    "ann_ndcg_at_k",
-]
+_HERE = Path(__file__).resolve().parent
+_REPORT = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_GREEN = ("rows_match", "schema_match", "hash_match")
 
-_R12_WAVE = [
-    # Round-12 newcomers: locally green + fixture-pinned since r12 but
-    # never driver-attested (the r12 window was exactly consumed by the
-    # staleness drain) — the r13 window head per the r12 verdict item 1.
-    "ewma_hourly",
-    "functional_dependency_audit",
-    "mlm_masking_plan",
-    "rrf_fusion",
-    "term_lift_by_lang",
-    "winsorize_audit",
-]
 
-_R8_TIER = [
-    # Newest driver row is CORRECTNESS_r08 (35 slugs) — the stalest
-    # tier, all inside the r13 window, so after r13 no slug's newest
-    # row predates r9.
-    "anomaly_zscore_hours",
-    "distinct_agg",
-    "filter_predicate",
-    "graph_reachability",
-    "graph_search_age",
-    "groupby_count",
-    "groupby_having",
-    "interval_overlap_blocked",
-    "join_anti",
-    "join_broadcast",
-    "join_link_table",
-    "join_outer",
-    "join_semi",
-    "join_theta_range",
-    "json_ops",
-    "map_ops",
-    "math_functions",
-    "mixture_weights",
-    "nearest_event_join",
-    "nested_field_access",
-    "project_columns",
-    "regex_extract_all",
-    "rollup_cube",
-    "set_ops",
-    "sort_limit",
-    "sql_passthrough",
-    "stream_stateful_totals",
-    "string_functions",
-    "subquery_exists",
-    "timeseries_gapfill",
-    "topk_argmax",
-    "topk_per_group",
-    "vocab_coverage",
-    "window_rank",
-    "window_running_sum",
-]
+def newest_green(reports_dir: Path) -> dict[str, int]:
+    """Slug -> round of its newest green row in ``CORRECTNESS_r<N>.json``.
 
-_R9_TIER = [
-    # Newest driver row is CORRECTNESS_r09 (42 slugs) — the r14
-    # cohort's head after the r13 spill.
-    "anomaly_mad",
-    "bm25_scoring",
-    "boilerplate_ngrams",
-    "cms_frequency_audit",
-    "column_profile",
-    "compaction_bin_packing",
-    "embedding_norm_outliers",
-    "embedding_pca_power",
-    "event_transitions",
-    "ivf_cell_balance",
-    "js_divergence_sources",
-    "k_anonymity_audit",
-    "lang_confusion_matrix",
-    "mutual_information",
-    "psi_drift_audit",
-    "quality_filter_cascade",
-    "quantiles_per_key",
-    "referential_integrity_audit",
-    "shuffle_skew_audit",
-    "simhash_hamming_audit",
-    "snapshot_diff",
-    "time_weighted_avg",
-    "token_entropy_by_source",
-    "tpch_q11_shape",
-    "tpch_q12_shape",
-    "tpch_q13_shape",
-    "tpch_q14_shape",
-    "tpch_q15_shape",
-    "tpch_q16_shape",
-    "tpch_q17_shape",
-    "tpch_q19_shape",
-    "tpch_q1_shape",
-    "tpch_q20_shape",
-    "tpch_q21_shape",
-    "tpch_q22_shape",
-    "tpch_q2_shape",
-    "tpch_q4_shape",
-    "tpch_q6_shape",
-    "tpch_q7_shape",
-    "tpch_q8_shape",
-    "tpch_q9_shape",
-    "weighted_sample",
-]
+    A row is green when rows, schema and value hash all match and it
+    carries no error."""
+    newest: dict[str, int] = {}
+    for path in Path(reports_dir).glob("CORRECTNESS_r*.json"):
+        m = _REPORT.fullmatch(path.name)
+        if not m:
+            continue
+        for slug, row in json.loads(path.read_text()).items():
+            if all(row.get(k) is True for k in _GREEN) and row.get("err") is None:
+                newest[slug] = max(newest.get(slug, 0), int(m.group(1)))
+    return newest
 
-_R13B_WAVE = [
-    # Round-13 SECOND wave (registry 233 -> 239): written after the
-    # r13 attestation window was already exactly consumed by the
-    # wave-1 changed slugs + r12 wave + r8-tier drain, so these six
-    # ship locally green (tri-SF oracle sweeps + dual-engine fixtures
-    # in tests/test_wave13b_ops.py) and driver-unattested — the r14
-    # window head alongside r14's changed slugs (the r12-wave
-    # precedent).  Deliberately placed AFTER the 50-slot boundary.
-    "zipf_fit_audit",
-    "span_corruption_plan",
-    "join_cardinality_audit",
-    "contribution_capping_audit",
-    "target_encode_loo",
-    "timeseries_interpolate",
-]
 
-_R10_TIER = [
-    # Newest driver row is CORRECTNESS_r10 (44 slugs; the 45th, the
-    # old bare dedup_embedding config, moved up into _R13_CHANGED
-    # under its new fullrecall_audit name).
-    "ann_cosine_topk",
-    "ann_ivf_cells",
-    "ann_lsh_bucketed",
-    "ann_lsh_multiprobe",
-    "bigram_lm_perplexity",
-    "bpe_pair_stats",
-    "corpus_stats",
-    "cross_split_leakage",
-    "dataset_split",
-    "decontamination",
-    "dedup_clusters",
-    "dedup_containment",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_paragraph",
-    "dedup_simhash",
-    "dedup_survivors",
-    "dup_span_detect",
-    "embedding_centroids",
-    "embedding_quantize",
-    "global_shuffle",
-    "graph_components",
-    "graph_reachability_min2",
-    "graph_search_aggregate",
-    "graph_search_dsl",
-    "graph_search_edge_typed",
-    "graph_search_fulltext",
-    "graph_search_has_key",
-    "graph_search_in_subnet",
-    "graph_search_inbound",
-    "graph_search_nested_with",
-    "graph_search_not",
-    "graph_search_sorted",
-    "graph_search_with",
-    "grouping_sets",
-    "hard_negatives",
-    "join_asof",
-    "minhash_estimate_vs_exact",
-    "novelty_score",
-    "record_linkage_blocked",
-    "watermark_lag_audit",
-    "winnow_fingerprints",
-]
+def attest_order(names: Iterable[str], reports_dir: Path = _HERE) -> list[str]:
+    """Rank ``names`` for the driver's attestation window.
 
-_R11_TIER = [
-    # Newest driver row is CORRECTNESS_r11 (49 slugs).
-    "ann_pq_adc",
-    "ann_recall_at_k",
-    "bloom_prefilter_audit",
-    "bpe_encode_corpus",
-    "bpe_train_merges",
-    "coengagement_pairs",
-    "dsir_importance_weights",
-    "dup_span_merge",
-    "graph_kcore",
-    "graph_triangle_count",
-    "heavy_hitters_audit",
-    "hll_estimate_vs_exact",
-    "hll_merge_by_source",
-    "jl_projection_audit",
-    "join_lateral",
-    "kmv_set_ops",
-    "ks_drift_audit",
-    "l_diversity_audit",
-    "median_stats",
-    "mmr_diversify",
-    "multimodal_decode",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_ppm_resize",
-    "multimodal_ppm_stats",
-    "multimodal_scene_cuts",
-    "multimodal_wav_stats",
-    "ngram_collocations",
-    "pandas_udaf_zscore",
-    "pareto_frontier",
-    "phrase_search",
-    "pii_redaction",
-    "pivot_table",
-    "quantile_sample_audit",
-    "repetition_filter",
-    "salted_groupby",
-    "semdedup",
-    "sessionize_events",
-    "skew_join_salted",
-    "sparse_cosine_pairs",
-    "string_agg",
-    "t_closeness_audit",
-    "temperature_mixture",
-    "tpch_q10_shape",
-    "tpch_q3_shape",
-    "tpch_q5_shape",
-    "unpivot_stack",
-    "window_range_frame",
-    "zorder_pruning_audit",
-]
+    ``CHANGED`` first, then slugs with no green row in any report, then
+    the rest by the round of their newest green row, oldest first.  The
+    sort is stable, so registry order breaks ties; with no reports the
+    order is registry order.  Report names that are not in ``names``
+    are ignored."""
+    names = list(names)
+    head = [n for n in CHANGED if n in names]
+    newest = newest_green(reports_dir)
+    rest = [n for n in names if n not in head]
+    return head + sorted(rest, key=lambda n: newest.get(n, -1))
 
-_R12_TIER = [
-    # Newest driver row is CORRECTNESS_r12 (49 slugs: the r12 window's
-    # 50 minus dedup_embedding_t80, whose shape moved up into
-    # _R13_CHANGED under the bare dedup_embedding name).
-    "knn_label_agreement",
-    "benford_audit",
-    "cusum_changepoint",
-    "gazetteer_tagging",
-    "kneser_ney_bigram",
-    "rank_biased_overlap",
-    "agg_bool_ops",
-    "agg_filter_clause",
-    "agg_sum_avg_min_max",
-    "array_ops",
-    "cdc_latest",
-    "class_rebalance",
-    "curation_pipeline",
-    "date_functions",
-    "dedup_levenshtein",
-    "distinct_kmv_estimate",
-    "doc_fingerprint",
-    "frequent_terms",
-    "funnel_conversion",
-    "graph_pagerank",
-    "graph_shortest_paths",
-    "interval_overlap",
-    "kmeans_lloyd",
-    "lang_id",
-    "ntile_deciles",
-    "quality_score",
-    "quota_sample",
-    "retention_cohorts",
-    "sample_hash_stratified",
-    "scd2_intervals",
-    "sequence_packing",
-    "stream_dedup",
-    "stream_distinct_users",
-    "stream_interval_join",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_topk_windowed",
-    "stream_tumbling_window",
-    "subquery_scalar_correlated",
-    "table_checksum",
-    "text_chunking",
-    "text_normalize",
-    "tfidf_top_terms",
-    "token_count",
-    "tpch_q18_shape",
-    "udtf_tokenize",
-    "unigram_logprob",
-    "window_first_last",
-    "window_lag_lead",
-]
 
-# Round-14 window composition.  Moved-up slugs are removed from their
-# home tiers by comprehension so each name appears EXACTLY once (the
-# rank dict in _ordered keeps the LAST occurrence, so a duplicate
-# would silently demote a head slug).
-_R13_ATTESTED = _R13_CHANGED + _R12_WAVE + _R8_TIER + ["anomaly_mad"]
-_R9_REST = [s for s in _R9_TIER if s not in ("anomaly_mad", "bm25_scoring")]
-_R11_REST = [
-    s for s in _R11_TIER
-    if s not in ("ngram_collocations", "sparse_cosine_pairs")
-]
-_R12_REST = [
-    s for s in _R12_TIER
-    if s not in ("kneser_ney_bigram", "graph_shortest_paths")
-]
-
-_ATTEST_FIRST = (
-    _R14_HEAD
-    + _R13B_WAVE
-    + _R9_REST
-    + _R10_TIER
-    + _R11_REST
-    + _R12_REST
-    + _R13_ATTESTED
-)
-
-# Window arithmetic (the driver attests the FIRST 50 dict entries):
-# 5 head (1 r14-changed + 4 r13-changed-unattested, r13 ADVICE item 1)
-# + 6 never-attested _R13B_WAVE = 11, then the r9 staleness drain:
-# _R9_REST has 40 slugs (42 - anomaly_mad, re-attested r13, -
-# bm25_scoring, moved into the head), of which the first 39 fit —
-# slots 12..50 — and the last (weighted_sample) spills to slot 51 as
-# the r15 cohort's head.  Totals: 5 + 6 + 40 + 44 r10 + 47 r11-rest
-# + 47 r12-rest + 50 r13-attested = 239 = the full registry.
-# The r15 window head should be that one spilled r9 slug + the 44
-# r10-tier slugs + r15's own changed slugs (5 spare slots).
-_R15_COHORT = _ATTEST_FIRST[50:]
+_ORDER = attest_order(registry.QUERIES)
 
 
 def _ordered(mapping: dict) -> dict:
-    rank = {name: i for i, name in enumerate(_ATTEST_FIRST)}
-    names = sorted(
-        mapping,
-        key=lambda n: (rank.get(n, len(_ATTEST_FIRST)), list(mapping).index(n)),
-    )
-    return {n: mapping[n] for n in names}
+    return {n: mapping[n] for n in _ORDER if n in mapping}
 
 
 def entry(spark: SparkSession) -> DataFrame:

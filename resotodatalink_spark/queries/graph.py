@@ -965,18 +965,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _triangle_build(spark, sf_dir)
 
 
-def _ckpt_lazy(df: DataFrame) -> DataFrame:
-    """Default lineage-truncation hook for the iterative graph slugs.
-
-    ``localCheckpoint`` rewrites the logical plan to a LogicalRDD, so
-    everything upstream of the first checkpoint is INVISIBLE to plan
-    inspection — the Cartesian/BNLJ sweep in tests/test_plan_guards.py
-    would pass vacuously for the expensive self-joins here.  The
-    builders below therefore take the hook as a parameter; the guard
-    test re-builds with an identity hook and sweeps the FULL plan."""
-    return _ckpt(df)
-
-
 def _ckpt_eager(df: DataFrame) -> DataFrame:
     """Eager variant for frames consumed by MULTIPLE subtrees of ONE
     action: AQE materializes independent query stages concurrently, so

@@ -4,9 +4,17 @@ the sf0.01 run)."""
 
 from __future__ import annotations
 
+import json
+import shutil
+import subprocess
+import sys
+from collections import Counter
+from pathlib import Path
+
 import duckdb
 import pytest
 
+import __spark_entry__ as entrymod
 import tools.check_queries as chk
 from resotodatalink_spark import registry
 from tests.conftest import SF_DIR
@@ -32,13 +40,8 @@ def test_harness_rejects_list_typed_frames():
     assert chk.complex_columns(mapcol) == ["m"]
 
 
-@pytest.mark.slow  # ~500s: redundant with tools/check_queries.py's
-# tri-SF value-hash sweep (run every round) and the driver's own
-# CORRECTNESS gate; default-skipped so `pytest tests/ -x -q` fits the
-# driver's verify window (r13 verdict item 2).  SPARK_GRAFT_FULL_TESTS=1
-# runs it.
-@pytest.mark.parametrize("name", sorted(registry.QUERIES))
-def test_query_matches_oracle(name, spark, duck):
+def assert_matches_oracle(name, spark, duck):
+    """Spark output of slug ``name`` vs its DuckDB oracle at sf0.001."""
     sdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
     assert chk.complex_columns(sdf) == [], (
         "driver-uncanonicalizable (list/map-typed) output columns — "
@@ -72,33 +75,100 @@ def test_query_matches_oracle(name, spark, duck):
         pytest.fail(f"{int(neq.sum())} differing rows, e.g.\n{detail}")
 
 
-def test_attest_window_consistency():
-    """The driver attests the FIRST 50 queries() entries: every name in
-    the ordering list must be a registered slug (a typo would silently
-    burn a window slot), with no duplicates, and the dict must contain
-    every registered slug exactly once."""
-    import __spark_entry__ as entry
+@pytest.mark.slow  # ~500s: redundant with tools/check_queries.py's
+# tri-SF value-hash sweep (run every round) and the driver's own
+# CORRECTNESS gate; default-skipped so `pytest tests/ -x -q` fits the
+# driver's verify window (r13 verdict item 2).  SPARK_GRAFT_FULL_TESTS=1
+# runs it.
+@pytest.mark.parametrize("name", sorted(registry.QUERIES))
+def test_query_matches_oracle(name, spark, duck):
+    assert_matches_oracle(name, spark, duck)
 
-    names = list(entry.queries())
+
+@pytest.mark.parametrize("name", entrymod.CHANGED)
+def test_changed_slug_matches_oracle(name, spark, duck):
+    """Always-on oracle check for the slugs changed since the newest
+    CORRECTNESS report — they lead the driver's attestation window."""
+    assert_matches_oracle(name, spark, duck)
+
+
+REPO = Path(__file__).resolve().parent.parent
+_GREEN_ROW = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+
+
+def test_attest_window_consistency():
+    """The driver attests the FIRST 50 queries() entries: the dict is a
+    permutation of the registry, CHANGED leads inside the window, and
+    after it the newest-green round never decreases, ties keeping
+    registry order."""
+    names = list(entrymod.queries())
     assert sorted(names) == sorted(registry.QUERIES)
-    af = entry._ATTEST_FIRST
-    assert len(af) == len(set(af)), "duplicate slug in _ATTEST_FIRST"
-    unknown = set(af) - set(registry.QUERIES)
-    assert not unknown, f"unknown slugs in _ATTEST_FIRST: {unknown}"
-    # the never-attested backlog and this round's changed slugs must
-    # sit inside the 50-slot window (round-9 policy: no driver row
-    # ever / changed this round => head of window, unconditionally)
-    window = set(names[:50])
-    assert set(entry._R14_HEAD) <= window
-    assert set(entry._R13B_WAVE) <= window
-    # the rest of the r14 window is the r9 staleness drain: 39 of the
-    # 40 remaining r9-tier slugs fit, the last spills to the r15 head
-    head = entry._R14_HEAD + entry._R13B_WAVE
-    assert window == set(head + entry._R9_REST[: 50 - len(head)])
-    # the r15 cohort is exactly the slugs the r14 window spills
-    # (r9-spill + r10/r11/r12/r13-fresh slugs rotate later)
-    assert set(entry._R15_COHORT) == set(entry._ATTEST_FIRST) - window
-    assert not set(entry._R15_COHORT) & window
+    assert len(names) == len(set(names))
+    assert list(entrymod.oracle_sql()) == [n for n in names if n in registry.ORACLES]
+    changed = entrymod.CHANGED
+    assert set(changed) <= set(registry.QUERIES), "CHANGED names an unknown slug"
+    assert len(changed) == len(set(changed)) and len(changed) < 50
+    assert names[: len(changed)] == changed
+    pos = {n: i for i, n in enumerate(registry.QUERIES)}
+    newest = entrymod.newest_green(REPO)
+    rest = names[len(changed) :]
+    assert rest == sorted(rest, key=lambda n: (newest.get(n, -1), pos[n]))
+
+
+def test_attest_order_reads_reports(tmp_path, monkeypatch):
+    """A red row does not count as attested, report names outside the
+    registry are ignored, and CHANGED leads whatever its reports say."""
+    monkeypatch.setattr(entrymod, "CHANGED", ["e"])
+    red = dict(_GREEN_ROW, hash_match=False)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"a": _GREEN_ROW, "b": _GREEN_ROW, "c": red, "ghost": _GREEN_ROW})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"a": dict(_GREEN_ROW, err="boom"), "b": _GREEN_ROW, "e": _GREEN_ROW})
+    )
+    names = ["b", "a", "e", "c", "d"]
+    assert entrymod.attest_order(names, tmp_path) == ["e", "c", "d", "a", "b"]
+    # no reports at all: registry order behind CHANGED
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert entrymod.attest_order(names, empty) == ["e", "b", "a", "c", "d"]
+
+
+def test_attest_window_from_committed_reports(tmp_path):
+    """Reports r01-r14 put weighted_sample (newest green r9) and the 44
+    r10-tier slugs right behind CHANGED, with r11 slugs in registry
+    order filling the rest of the 50-slot window."""
+    for r in range(1, 15):
+        shutil.copy(REPO / f"CORRECTNESS_r{r:02d}.json", tmp_path)
+    newest = entrymod.newest_green(tmp_path)
+    assert Counter(newest[s] for s in registry.QUERIES) == {
+        9: 1, 10: 44, 11: 47, 12: 47, 13: 50, 14: 50
+    }
+    window = entrymod.attest_order(registry.QUERIES, tmp_path)[:50]
+    changed = entrymod.CHANGED
+    tier = {
+        r: [s for s in registry.QUERIES if newest[s] == r and s not in changed]
+        for r in (9, 10, 11)
+    }
+    assert tier[9] == ["weighted_sample"]
+    stale = tier[9] + tier[10]
+    assert window == changed + stale + tier[11][: 50 - len(changed) - len(stale)]
+
+
+def test_attest_order_from_foreign_cwd(tmp_path):
+    """The reports are found relative to the entry module, not the cwd."""
+    code = (
+        f"import json, sys; sys.path.insert(0, {str(REPO)!r}); "
+        "import __spark_entry__ as e; print(json.dumps(list(e.queries())))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert json.loads(out.splitlines()[-1]) == list(entrymod.queries())
 
 
 def test_bench_names_registered():
